@@ -128,6 +128,13 @@ object BenchWindow {
 }
 
 object Bench {
+  /** A file in the checkout's `tools/` (floors, last-run lines, wire
+    * history), resolved against the working directory — sbt starts forked
+    * mains in the project root — so a bench run from any copy of the
+    * checkout reads and persists that copy's floors. */
+  def toolsFile(name: String): java.io.File =
+    new java.io.File(new java.io.File("tools").getAbsoluteFile, name)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -277,7 +284,7 @@ object Bench {
         () => graft.operators.Dedup.cachedSimhash(spark, sfDir)
           .queryExecution.toRdd.count()),
       // The once-per-MACHINE materialized log snapshots (r17): without
-      // these rows, whichever materialized-lag query ran first on a
+      // these rows, whichever broker query ran first on a
       // fresh machine — the driver's environment, EVERY round — paid the
       // snapshot build inside its own timing, reading ~2.4x the floor set
       // on warm-snapshot machines (the r16 consumer_lag_materialized
@@ -298,10 +305,8 @@ object Bench {
     // count now ratchets its own floor file; a missing keyed file seeds
     // from the legacy un-keyed file so pre-r18 history isn't lost.
     val sfKey = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-    val baselineFile = new java.io.File(
-      s"/root/repo/tools/bench_baseline_${sfKey}_c$cpus.json")
-    val legacyBaselineFile = new java.io.File(
-      s"/root/repo/tools/bench_baseline_$sfKey.json")
+    val baselineFile = toolsFile(s"bench_baseline_${sfKey}_c$cpus.json")
+    val legacyBaselineFile = toolsFile(s"bench_baseline_$sfKey.json")
     val seedFile =
       if (baselineFile.exists()) baselineFile else legacyBaselineFile
     val prev: Map[String, Double] =
@@ -596,8 +601,7 @@ object Bench {
     // prev_bench_ok=false). Best-effort — a read-only checkout must not
     // fail the bench.
     try {
-      val lastFile = new java.io.File(
-        s"/root/repo/tools/last_bench_${sfKey}_c$cpus.json")
+      val lastFile = toolsFile(s"last_bench_${sfKey}_c$cpus.json")
       val lw = new java.io.PrintWriter(lastFile)
       try lw.write(jsonLine + "\n") finally lw.close()
     } catch { case scala.util.control.NonFatal(_) => () }

@@ -33,10 +33,12 @@ object SparkEntry {
     "watermarks" -> (BrokerOps.watermarkQuery(_, _)),
     "consumer_lag" -> (BrokerOps.consumerLag(_, _)),
     "log_compaction" -> (BrokerOps.logCompaction(_, _)),
-    "consumer_lag_materialized" -> (BrokerOps.consumerLagMaterialized(_, _)),
+    // the *_materialized keys predate every broker row reading the
+    // snapshot; they stay as aliases of the same query
+    "consumer_lag_materialized" -> (BrokerOps.consumerLag(_, _)),
     "consumer_lag_multi_topic" -> (BrokerOps.consumerLagMultiTopic(_, _)),
     "consumer_lag_multi_topic_materialized" ->
-      (BrokerOps.consumerLagMultiTopicMaterialized(_, _)),
+      ((s, dir) => BrokerOps.consumerLagMultiTopic(s, dir, None)),
     "consumer_lag_topic_filter" -> ((s, dir) => BrokerOps.consumerLagMultiTopic(
       s, dir, Some(BrokerOps.TopicFilterExample))),
     "partition_health" -> (BrokerOps.partitionHealth(_, _)),

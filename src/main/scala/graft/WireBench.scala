@@ -118,7 +118,7 @@ object WireBench {
       catch { case scala.util.control.NonFatal(_) => "-1" }
     val line = s"""{"metric":"wire_msgs_per_sec","unit":"msgs/sec","n_small":$nSmall,"n_large":$nLarge,"rates":$qs}"""
     println(line)
-    val hist = new java.io.File("/root/repo/tools/wirebench_history.jsonl")
+    val hist = Bench.toolsFile("wirebench_history.jsonl")
     if (hist.getParentFile.isDirectory) {
       val w = new java.io.FileWriter(hist, true)
       try w.write(s"""{"ts":${System.currentTimeMillis()},"loadavg_1m":$loadavg,"n_small":$nSmall,"n_large":$nLarge,"rates":$qs}""" + "\n")

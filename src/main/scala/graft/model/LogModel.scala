@@ -1,7 +1,6 @@
 package graft.model
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Canonical log-structured view of the `events` table — the Spark-native
@@ -35,15 +34,18 @@ import org.apache.spark.sql.functions._
   *    straddle a boundary. Same monotone mapping offset→segment, same scale
   *    behavior.
   *
-  * Scale posture (100 TB): `toLog` is a single scan + the two-phase
-  * grouped prefix ([[graft.plans.OrderedIndex]]) — a range shuffle at full
-  * task parallelism, never a `partitionBy(part_id)` window that would cap
-  * the sort at the topic's partition count. In a real deployment offsets
-  * are assigned at ingest (streaming, see graft.streaming /
-  * graft.sources.Broker) and MATERIALIZED ([[graft.sources.LogTable]]), so
-  * batch queries read them as data with partition pruning; the recompute
-  * here is the oracle-checkable batch definition. All downstream queries
-  * are pure aggregations/joins that inherit pruning and AQE.
+  * Scale posture (100 TB): `toLog` is a single scan + ONE two-phase
+  * grouped prefix ([[graft.plans.OrderedIndex]]) yielding offsets and
+  * segment bytes together — a range shuffle at full task parallelism,
+  * never a `partitionBy(part_id)` window that would cap the sort at the
+  * topic's partition count. `toLog` is the definition of the stored log,
+  * not a per-query step: like the reference, which assigns offsets and
+  * segments once at append time, [[graft.sources.LogTable]] runs it once
+  * per input and MATERIALIZES the result, and every BrokerOps query reads
+  * that snapshot as data (partition pruning, parquet column pruning).
+  * The oracle checks those queries, so a hash match proves snapshot ≡
+  * definition. All downstream queries are pure aggregations/joins that
+  * inherit pruning and AQE.
   */
 object LogModel {
   /** Partition count of the synthetic topic (reference default is 1,
@@ -90,9 +92,11 @@ object LogModel {
   def events(spark: SparkSession, sfDir: String): DataFrame =
     graft.sources.Tables.load(spark, sfDir, "events")
 
-  /** events → log records with part_id / msg_offset / record_size.
+  /** events → log records with part_id / msg_offset / record_size /
+    * bytes_before / segment_id.
     * Columns: event_id, ts, user_id, event_type, value, props,
-    * mkey (string key), part_id, msg_offset, record_size.
+    * mkey (string key), part_id, record_size, msg_offset, bytes_before,
+    * segment_id.
     *
     * Offset assignment uses the two-phase grouped prefix
     * ([[graft.plans.OrderedIndex]]) instead of
@@ -100,36 +104,29 @@ object LogModel {
     * shuffles the ENTIRE log into `NumPartitions` sort tasks (25 TB/task at
     * 100 TB — round-1 verdict's core scale-killer); the two-phase form runs
     * at full cluster parallelism with an O(tasks × partitions) driver
-    * prefix-sum. */
+    * prefix-sum.
+    *
+    * `record_size` is computed BEFORE the prefix so the same pass yields
+    * both the dense offset (row count) and the running byte total
+    * `bytes_before` (sum of `record_size`) over the one (ts, event_id)
+    * order: segment assignment costs no second range exchange, pass-1
+    * job or pass-2 scan. `segment_id = floor(bytes_before /
+    * SegmentMaxBytes)` (see the scaladoc above for the floor-based
+    * rotation semantics). */
   def toLog(events: DataFrame, n: Int = NumPartitions): DataFrame = {
     val withPart = events
       .withColumn("mkey", col("user_id").cast("string"))
       .withColumn("part_id",
         pmod(portableHash(col("user_id")), lit(n.toLong)).cast("long"))
-    graft.plans.OrderedIndex.withExclusivePrefix(
-        withPart, Seq("part_id"), Seq("ts", "event_id"), None, "msg_offset")
       .withColumn("record_size",
         (lit(32) + octet_length(col("mkey")) + octet_length(col("props")))
           .cast("long"))
-  }
-
-  /** log → + segment_id, via running byte total per partition (same
-    * two-phase prefix machinery, summing record_size instead of counting;
-    * see scaladoc for the floor-based rotation semantics).
-    *
-    * Sort keys are (ts, event_id), NOT msg_offset — identical order by
-    * construction (offsets are assigned along exactly that order in
-    * [[toLog]]), and phrased this way the node's required distribution is
-    * the one the offset-assignment prefix ALREADY established, so
-    * EnsureRequirements elides the second range exchange + sort: the
-    * whole log shuffles once, not twice, on the segment-stats path. */
-  def withSegments(log: DataFrame,
-                   segMaxBytes: Long = SegmentMaxBytes): DataFrame =
-    graft.plans.OrderedIndex.withExclusivePrefix(
-        log, Seq("part_id"), Seq("ts", "event_id"), Some("record_size"),
-        "bytes_before")
+    graft.plans.OrderedIndex.withExclusivePrefixes(
+        withPart, Seq("part_id"), Seq("ts", "event_id"),
+        Seq(None -> "msg_offset", Some("record_size") -> "bytes_before"))
       .withColumn("segment_id",
-        floor(col("bytes_before") / lit(segMaxBytes)).cast("long"))
+        floor(col("bytes_before") / lit(SegmentMaxBytes)).cast("long"))
+  }
 
   /** Topic assignment for the MULTI-topic log model: the event stream
     * routed to three topics by type (clicks / purchases / activity), the

@@ -6,7 +6,7 @@ import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeReference, AttributeSet, GenericInternalRow, JoinedRow, SortOrder, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeReference, AttributeSet, Expression, GenericInternalRow, JoinedRow, Literal, SortOrder, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{Distribution, OrderedDistribution, Partitioning}
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
@@ -45,7 +45,10 @@ import org.apache.spark.sql.types.LongType
   *
   * The reference assigns offsets at ingest with an atomic fetch_add
   * (`flyq-server/src/core/partition_state.rs:27-29`); this is the batch
-  * recompute of the same assignment at cluster parallelism.
+  * form of the same assignment at cluster parallelism, run once per input
+  * when the log snapshot is built ([[graft.sources.LogTable]]). Several
+  * prefixes over one order share one pass ([[withExclusivePrefixes]]):
+  * the log's offsets and segment bytes come out together.
   */
 object OrderedIndex {
 
@@ -58,9 +61,21 @@ object OrderedIndex {
                           groupCols: Seq[String],
                           sortCols: Seq[String],
                           valueCol: Option[String],
-                          outCol: String): DataFrame = {
+                          outCol: String): DataFrame =
+    withExclusivePrefixes(df, groupCols, sortCols, Seq(valueCol -> outCol))
+
+  /** Several exclusive prefixes over the same (groupCols, sortCols) order
+    * in ONE pass: each `(valueCol, outCol)` pair adds `outCol` exactly as
+    * [[withExclusivePrefix]] would, but the range exchange, the pass-1
+    * totals job and the pass-2 scan are shared — pass 1 collects a
+    * `long[]` per group, pass 2 emits every prefix of the row. */
+  def withExclusivePrefixes(df: DataFrame,
+                            groupCols: Seq[String],
+                            sortCols: Seq[String],
+                            prefixes: Seq[(Option[String], String)]): DataFrame = {
     require(groupCols.nonEmpty || sortCols.nonEmpty,
       "withExclusivePrefix needs at least one group or sort column")
+    require(prefixes.nonEmpty, "withExclusivePrefixes needs at least one output")
     val spark = df.sparkSession
     ensureRegistered(spark)
     val child = org.apache.spark.sql.graftbridge.Bridge.analyzed(df)
@@ -70,8 +85,10 @@ object OrderedIndex {
         throw new IllegalArgumentException(
           s"column $name not in ${child.output.map(_.name).mkString(",")}"))
     val order = (groupCols ++ sortCols).map(c => SortOrder(attr(c), Ascending))
-    val node = GroupedPrefix(groupCols.map(attr), order, valueCol.map(attr),
-      AttributeReference(outCol, LongType, nullable = false)(), child)
+    val node = GroupedPrefix(groupCols.map(attr), order,
+      prefixes.map(_._1.fold[Expression](GroupedPrefix.CountRows)(attr)),
+      prefixes.map(p => AttributeReference(p._2, LongType, nullable = false)()),
+      child)
     org.apache.spark.sql.graftbridge.Bridge.ofRows(spark, node)
   }
 
@@ -87,19 +104,29 @@ object OrderedIndex {
   }
 }
 
-/** Logical node: output = child's columns plus the prefix column. Opaque to
-  * the optimizer (no pushdown through it), which is correct: every use site
-  * feeds it the minimal projection it needs. */
+/** Logical node: output = child's columns plus one prefix column per
+  * `valueCols` entry — a LONG child column to sum, or
+  * [[GroupedPrefix.CountRows]] to count rows. (Plain expressions, not
+  * Options: Catalyst only sees the attributes a node references through
+  * its expression fields, and column pruning drops the rest.) Opaque to
+  * the optimizer (no pushdown through it), which is correct: every use
+  * site feeds it the minimal projection it needs. */
 case class GroupedPrefix(groupCols: Seq[Attribute],
                          order: Seq[SortOrder],
-                         valueCol: Option[Attribute],
-                         prefixAttr: AttributeReference,
+                         valueCols: Seq[Expression],
+                         prefixAttrs: Seq[AttributeReference],
                          child: LogicalPlan) extends UnaryNode {
-  override def output: Seq[Attribute] = child.output :+ prefixAttr
-  override def producedAttributes: AttributeSet = AttributeSet(prefixAttr)
+  require(valueCols.size == prefixAttrs.size, "one prefix column per value")
+  override def output: Seq[Attribute] = child.output ++ prefixAttrs
+  override def producedAttributes: AttributeSet = AttributeSet(prefixAttrs)
   override def maxRows: Option[Long] = child.maxRows
   override protected def withNewChildInternal(newChild: LogicalPlan): GroupedPrefix =
     copy(child = newChild)
+}
+
+object GroupedPrefix {
+  /** The value of a row-count prefix (dense 0-based index per group). */
+  val CountRows: Expression = Literal(1L)
 }
 
 object GroupedPrefixStrategy extends SparkStrategy {
@@ -115,12 +142,12 @@ object GroupedPrefixStrategy extends SparkStrategy {
   * exchange/sort itself (and can reuse it across subtrees). */
 case class GroupedPrefixExec(groupCols: Seq[Attribute],
                              order: Seq[SortOrder],
-                             valueCol: Option[Attribute],
-                             prefixAttr: Attribute,
+                             valueCols: Seq[Expression],
+                             prefixAttrs: Seq[Attribute],
                              child: SparkPlan) extends UnaryExecNode {
 
-  override def output: Seq[Attribute] = child.output :+ prefixAttr
-  override def producedAttributes: AttributeSet = AttributeSet(prefixAttr)
+  override def output: Seq[Attribute] = child.output ++ prefixAttrs
+  override def producedAttributes: AttributeSet = AttributeSet(prefixAttrs)
   override def requiredChildDistribution: Seq[Distribution] =
     Seq(OrderedDistribution(order))
   override def requiredChildOrdering: Seq[Seq[SortOrder]] = Seq(order)
@@ -137,13 +164,16 @@ case class GroupedPrefixExec(groupCols: Seq[Attribute],
   override protected def doExecute(): RDD[InternalRow] = {
     val childOutput = child.output
     val group = groupCols
-    val valueOrdinal: Int = valueCol match {
-      case Some(a) =>
+    // one ordinal per prefix output; -1 = count rows
+    val valueOrdinals: Array[Int] = valueCols.map {
+      case a: Attribute =>
         val i = childOutput.indexWhere(_.exprId == a.exprId)
         require(i >= 0, s"value column $a vanished from child output")
         i
-      case None => -1
-    }
+      case GroupedPrefix.CountRows => -1
+      case e => throw new IllegalArgumentException(s"not a prefix value: $e")
+    }.toArray
+    val width = valueOrdinals.length
     val rdd = child.execute()
 
     // Pass 1 needs only per-group TOTALS per partition — order-
@@ -171,30 +201,32 @@ case class GroupedPrefixExec(groupCols: Seq[Attribute],
     }
 
     // pass 1: per-task per-group totals (tiny). Runs here — first action.
-    val counts: Array[(Int, Seq[(UnsafeRow, Long)])] =
+    val counts: Array[(Int, Seq[(UnsafeRow, Array[Long])])] =
       countInput.mapPartitionsWithIndex { (pid, it) =>
         val keyProj = UnsafeProjection.create(group, childOutput)
-        val m = mutable.LinkedHashMap.empty[UnsafeRow, Long]
+        val m = mutable.LinkedHashMap.empty[UnsafeRow, Array[Long]]
         it.foreach { row =>
-          val v = if (valueOrdinal < 0) 1L
-                  else if (row.isNullAt(valueOrdinal)) 0L
-                  else row.getLong(valueOrdinal)
           val k = keyProj(row) // reused buffer: copy only on first insert
-          m.get(k) match {
-            case Some(c) => m.update(k, c + v)
-            case None => m.update(k.copy(), v)
-          }
+          val acc = m.getOrElse(k, {
+            val a = new Array[Long](width)
+            m.update(k.copy(), a)
+            a
+          })
+          GroupedPrefixExec.accumulate(row, valueOrdinals, acc)
         }
         Iterator.single(pid -> m.toSeq)
       }.collect()
 
     // driver-side prefix sum across tasks, per group — O(tasks × groups)
-    val running = mutable.HashMap.empty[UnsafeRow, Long]
-    val bases = Array.fill(countInput.getNumPartitions)(Map.empty[UnsafeRow, Long])
+    val running = mutable.HashMap.empty[UnsafeRow, Array[Long]]
+    val bases =
+      Array.fill(countInput.getNumPartitions)(Map.empty[UnsafeRow, Array[Long]])
     counts.sortBy(_._1).foreach { case (pid, groups) =>
       bases(pid) = groups.map { case (k, c) =>
-        val b = running.getOrElse(k, 0L)
-        running.update(k, b + c)
+        val r = running.getOrElseUpdate(k, new Array[Long](width))
+        val b = r.clone()
+        var i = 0
+        while (i < width) { r(i) += c(i); i += 1 }
         k -> b
       }.toMap
     }
@@ -208,32 +240,33 @@ case class GroupedPrefixExec(groupCols: Seq[Attribute],
         org.apache.spark.sql.execution.SQLExecution.EXECUTION_ID_KEY),
       Seq(longMetric("numGroups")))
     val numOutputRows = longMetric("numOutputRows")
-    val basesB: Broadcast[Array[Map[UnsafeRow, Long]]] =
+    val basesB: Broadcast[Array[Map[UnsafeRow, Array[Long]]]] =
       session.sparkContext.broadcast(bases)
 
-    // pass 2: base + local running total (exclusive), appended as a column.
-    // outAttrs/pAttr hoisted so the closure captures plain Seqs, not
-    // `this` (the whole exec subtree would otherwise serialize per task).
+    // pass 2: base + local running totals (exclusive), appended as
+    // columns. outAttrs/pAttrs hoisted so the closure captures plain Seqs,
+    // not `this` (the whole exec subtree would otherwise serialize per
+    // task).
     val outAttrs = output
-    val pAttr = prefixAttr
+    val pAttrs = prefixAttrs
     rdd.mapPartitionsWithIndex { (pid, it) =>
       val keyProj = UnsafeProjection.create(group, childOutput)
-      val toUnsafe = UnsafeProjection.create(outAttrs, childOutput :+ pAttr)
+      val toUnsafe = UnsafeProjection.create(outAttrs, childOutput ++ pAttrs)
       val base = basesB.value(pid)
-      val local = mutable.HashMap.empty[UnsafeRow, Long]
-      val prefixRow = new GenericInternalRow(1)
+      // per group: running totals, seeded with the task's base
+      val local = mutable.HashMap.empty[UnsafeRow, Array[Long]]
+      val prefixRow = new GenericInternalRow(width)
       val joined = new JoinedRow
       it.map { row =>
-        val v = if (valueOrdinal < 0) 1L
-                else if (row.isNullAt(valueOrdinal)) 0L
-                else row.getLong(valueOrdinal)
         val k = keyProj(row)
-        val prefix = base.getOrElse(k, 0L) + local.getOrElse(k, 0L)
-        local.get(k) match {
-          case Some(c) => local.update(k, c + v)
-          case None => local.update(k.copy(), v)
-        }
-        prefixRow.update(0, prefix)
+        val acc = local.getOrElse(k, {
+          val a = base.get(k).map(_.clone()).getOrElse(new Array[Long](width))
+          local.update(k.copy(), a)
+          a
+        })
+        var i = 0
+        while (i < width) { prefixRow.update(i, acc(i)); i += 1 }
+        GroupedPrefixExec.accumulate(row, valueOrdinals, acc)
         numOutputRows += 1
         toUnsafe(joined(row, prefixRow))
       }
@@ -242,4 +275,17 @@ case class GroupedPrefixExec(groupCols: Seq[Attribute],
 
   override protected def withNewChildInternal(newChild: SparkPlan): GroupedPrefixExec =
     copy(child = newChild)
+}
+
+object GroupedPrefixExec {
+  /** Adds one row's contributions into `acc`: 1 where the ordinal is -1
+    * (row count), else the value column (null counts as 0). */
+  def accumulate(row: InternalRow, ordinals: Array[Int], acc: Array[Long]): Unit = {
+    var i = 0
+    while (i < ordinals.length) {
+      val o = ordinals(i)
+      acc(i) += (if (o < 0) 1L else if (row.isNullAt(o)) 0L else row.getLong(o))
+      i += 1
+    }
+  }
 }

@@ -29,7 +29,7 @@ class PrefixPlanSpec extends AnyFunSuite {
     val events = LogModel.events(spark, "/root/testdata/sf0.001")
     spark.sparkContext.addSparkListener(listener)
     try {
-      val df = LogModel.withSegments(LogModel.toLog(events))
+      val df = LogModel.toLog(events)
       // logical+physical planning included — still no job may run
       df.queryExecution.executedPlan
       Thread.sleep(500) // let any stray async job event land
@@ -87,8 +87,10 @@ class PrefixPlanSpec extends AnyFunSuite {
   }
 
   test("offset assignment plans through GroupedPrefixExec with a range exchange") {
-    val plan = graft.operators.BrokerOps
-      .offsetAssignment(spark, "/root/testdata/sf0.001")
+    // offsets are assigned where the log is built (the snapshot build),
+    // not in the offset_assignment query, which reads them back
+    val plan = LogModel.toLog(LogModel.events(spark, "/root/testdata/sf0.001"))
+      .select("event_id", "part_id", "msg_offset")
       .queryExecution.executedPlan.toString
     assert(plan.contains("GroupedPrefix")) // physical nodes print w/o "Exec"
     assert(plan.contains("rangepartitioning"),
